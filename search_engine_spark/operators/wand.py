@@ -12,17 +12,16 @@ Two query paths:
   (partition pruning on ``shard``/``bucket``; predicate pushdown on
   ``term_id``), the Spark analog of the reference's point KV gets.
 
-- ``topk_wand`` — score-ordered top-k with block-max pruning (north
-  rule; ABSENT in the reference, which scores exhaustively). Semantics:
-  disjunctive BM25-style S = Σ_t (1+ln tf_t)·ln(N/df_t) over the query
-  terms (no phrase/title boosts — bounds for the boosted score are not
-  tight enough to prune; the boosted rerank applies to the final k).
-  Implementation: elementary doc-range segments from all terms' block
-  boundaries, each with an upper bound Σ_t (1+ln block_max_tf)·idf_t;
-  segments visited in descending bound order, decoding blocks lazily
-  (``codec.slice_blocks``) and stopping as soon as the best remaining
-  bound cannot beat the running k-th score — every skipped block's
-  bytes are never touched.
+- score-ordered top-k (north rule; ABSENT in the reference, which
+  scores exhaustively): disjunctive S = Σ_t contrib_t over the query's
+  distinct terms, TF-IDF (1+ln tf)·ln(N/df) or BM25 (no phrase/title
+  boosts — bounds for the boosted score are not tight enough to prune).
+  One kernel per route, parameterized by scorer: the driver block-max
+  loop ``_wand_loop`` (and its exhaustive oracle ``_exhaustive_loop``)
+  behind ``topk_wand`` / ``topk_bm25_wand``, and one executor front half
+  (``_batched_prune_setup`` → ``_decode_tf_pruned_many_df``) shared by
+  ``topk_scores_distributed`` (Q=1, TakeOrdered tail) and
+  ``topk_scores_many`` (Q queries, partial top-k tail).
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codec
@@ -243,6 +242,9 @@ PRUNE_EPS = 1e-6
 # ≤ 4096 int64s per query term, independent of corpus size.
 SMALL_TERM_POSTINGS = 524_288
 
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 
 @dataclass
 class _OverlapMeta:
@@ -259,9 +261,9 @@ class _OverlapMeta:
 
 def _block_upper_bounds(bmax: np.ndarray, idf: float, scorer: str) -> np.ndarray:
     """Per-block single-posting contribution bound from the block_max_tf
-    sidecar. BM25 uses the dl→0 bound (tf term increasing in tf,
-    decreasing in dl — same bound as the driver route ``topk_bm25_wand``);
-    TF-IDF is exact in tf."""
+    sidecar, shared by the driver loop (``_wand_loop``) and the executor
+    kernel (``_decode_tf_pruned_many_df``). BM25 uses the dl→0 bound (tf
+    term increasing in tf, decreasing in dl); TF-IDF is exact in tf."""
     tf = bmax.astype(np.float64)
     if scorer == "bm25":
         return idf * (tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * (1.0 - BM25_B)))
@@ -292,122 +294,6 @@ def _decode_kept_blocks(blob, boff_scalar, df_i: int, keep: np.ndarray):
     )
 
 
-def _decode_tf_pruned_df(
-    seg_rows: DataFrame,
-    idfs: dict[int, float],
-    big_rest: dict[int, float],
-    overlap: dict[int, _OverlapMeta],
-    theta: float,
-    scorer: str,
-    stats_only: bool = False,
-) -> DataFrame:
-    """Executor-side BLOCK-MAX-PRUNED blob decode → (term_id, doc_id, tf).
-
-    Block b of term t (doc range [lo_b, hi_b] from the block_last
-    sidecar, lo widened to the previous block's end + 1) is decoded only
-    if::
-
-        ub_t(block_max_tf[b]) + big_rest[t]
-          + Σ_{t' small, t'≠t, t' overlaps [lo_b, hi_b]} ub_{t'}
-          >= theta − PRUNE_EPS
-
-    i.e. a doc in the block could reach the running k-th score given the
-    help actually available in its doc range: rare terms' help is gated
-    on a metadata-only overlap test (``_OverlapMeta``), hot terms' (whose
-    idf — hence help — is small) is granted unconditionally. Soundness:
-    a doc's true total is bounded by its own block's term bound plus, per
-    other term, that term's max contribution IF it overlaps the block's
-    range (a term with no posting in the range contributes 0) — so any
-    doc with true total >= theta keeps every one of its blocks, winners'
-    sums stay exact, and a doc with a pruned block has true total
-    < theta − ε, sorting (and 6-dp-rounding) strictly below the k-th
-    winner even on its partial sum. Kept blocks are decoded in contiguous
-    runs via ``codec.slice_blocks`` — skipped blocks' bytes are never
-    varint-decoded (VERDICT r3 "what's missing" #1; driver template
-    ``topk_wand``; reference read path
-    /root/reference/index/core/search.go:187-273 scores exhaustively —
-    the pruning is the north-rule upgrade at cluster scale).
-
-    ``stats_only=True`` returns (term_id, blocks_total, blocks_decoded)
-    per segment row instead — the same selection code path, observable
-    for tests/benchmarks without shipping postings.
-    """
-    import pyarrow as pa
-
-    def _keep_mask(tid: int, bmax: np.ndarray, blast: np.ndarray) -> np.ndarray:
-        ub = _block_upper_bounds(bmax, idfs[tid], scorer)
-        lo = np.empty_like(blast)
-        if blast.size:
-            lo[0] = 0  # first block's true start is unknown pre-decode;
-            lo[1:] = blast[:-1] + 1  # widening only weakens pruning
-        helpv = np.full(blast.size, float(big_rest[tid]))
-        for t2, om in overlap.items():
-            if t2 == tid or om.H.size == 0:
-                continue
-            j = np.searchsorted(om.H, lo, side="left")
-            ex = j < om.H.size
-            jc = np.minimum(j, om.H.size - 1)
-            ex &= om.Lsuf[jc] <= blast
-            helpv += np.where(ex, om.ub, 0.0)
-        return (ub + helpv) >= theta - PRUNE_EPS
-
-    def kernel(batches):
-        for batch in batches:
-            tids_c = batch.column("term_id").to_numpy(zero_copy_only=False)
-            dfs_c = batch.column("df").to_numpy(zero_copy_only=False)
-            blobs = batch.column("blob")
-            blasts = batch.column("block_last")
-            bmaxs = batch.column("block_max_tf")
-            boffs = batch.column("block_offsets")
-            out_t, out_d, out_f = [], [], []
-            st = ([], [], [])
-            for i in range(batch.num_rows):
-                tid = int(tids_c[i])
-                bmax = np.asarray(bmaxs[i].as_py(), np.int64)
-                blast = np.asarray(blasts[i].as_py(), np.int64)
-                keep = _keep_mask(tid, bmax, blast)
-                if stats_only:
-                    st[0].append(tid)
-                    st[1].append(int(bmax.size))
-                    st[2].append(int(keep.sum()))
-                    continue
-                if not keep.any():
-                    continue
-                doc_ids, npos = _decode_kept_blocks(
-                    blobs[i].as_py(), boffs[i], int(dfs_c[i]), keep
-                )
-                out_t.append(np.full(doc_ids.size, tid, np.int64))
-                out_d.append(doc_ids)
-                out_f.append(npos.astype(np.int64))
-            if stats_only and st[0]:
-                yield pa.record_batch(
-                    [
-                        pa.array(st[0], pa.int64()),
-                        pa.array(st[1], pa.int64()),
-                        pa.array(st[2], pa.int64()),
-                    ],
-                    names=["term_id", "blocks_total", "blocks_decoded"],
-                )
-            elif out_t:
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(out_t), pa.int64()),
-                        pa.array(np.concatenate(out_d), pa.int64()),
-                        pa.array(np.concatenate(out_f), pa.int64()),
-                    ],
-                    names=["term_id", "doc_id", "tf"],
-                )
-
-    cols = seg_rows.select(
-        "term_id", "df", "blob", "block_last", "block_max_tf", "block_offsets"
-    )
-    if stats_only:
-        return cols.mapInArrow(
-            kernel, "term_id long, blocks_total long, blocks_decoded long"
-        )
-    return cols.mapInArrow(kernel, "term_id long, doc_id long, tf long")
-
-
 def _decode_tf_pruned_many_df(
     seg_rows: DataFrame,
     idfs: dict[int, float],
@@ -416,13 +302,19 @@ def _decode_tf_pruned_many_df(
     scorer: str,
     stats_only: bool = False,
 ) -> DataFrame:
-    """Batched BLOCK-MAX-PRUNED blob decode → (term_id, doc_id, tf) for a
-    MULTI-QUERY plan (verdict r4 #2): each term is decoded once, and
-    block b of term t is kept iff ANY query using t still needs it::
+    """BLOCK-MAX-PRUNED blob decode → (term_id, doc_id, tf) for Q ≥ 1
+    queries: each term is decoded once, and block b of term t (doc range
+    [lo_b, hi_b] from the block_last sidecar, lo widened to the previous
+    block's end + 1) is kept iff ANY query using t still needs it::
 
         keep_t[b] = ∨_{q ∋ t} [ ub_t(b) + big_rest_q[t]
                       + Σ_{t' ∈ small(q), t'≠t, t' overlaps b's range} ub_{t'}
                       >= theta_q − PRUNE_EPS ]
+
+    i.e. a doc in the block could reach q's running k-th score given the
+    help actually available in its doc range: rare terms' help is gated
+    on a metadata-only overlap test (``_OverlapMeta``), hot terms' (whose
+    idf — hence help — is small) is granted unconditionally.
 
     ``term_specs[t]`` lists one spec per query using t:
     ``{"theta": float, "big_rest": {t: float}, "small": set[int]}`` —
@@ -431,21 +323,26 @@ def _decode_tf_pruned_many_df(
     ``_collect_prune_meta`` pass (ub is query-independent, so metadata is
     collected once for the union of terms). A spec with theta = −inf
     (single-term query, or rarest term thinner than k) keeps every block
-    of its terms.
+    of its terms; empty ``term_specs`` (nothing prunable) is the plain
+    ``_decode_tf_df``.
 
-    Soundness per query is exactly the single-query argument
-    (``_decode_tf_pruned_df``): q's winners keep all their blocks under
-    q's OWN criterion, so their sums stay exact; a doc that lost a block
-    for q has true q-total < theta_q − ε and sorts strictly below q's
-    k-th winner even on its partial sum. Blocks kept only because
-    ANOTHER query needs them add candidates to q, but only ones that
-    rank below q's winners — the OR is a superset of each query's own
-    keep set, and extra decoded rows can only introduce sub-theta
-    candidates, never perturb winner sums.
+    Soundness per query: a doc's true total is bounded by its own block's
+    term bound plus, per other term, that term's max contribution IF it
+    overlaps the block's range — so q's winners keep all their blocks
+    under q's OWN criterion and their sums stay exact, while a doc that
+    lost a block for q has true q-total < theta_q − ε and sorts (and
+    6-dp-rounds) strictly below q's k-th winner even on its partial sum.
+    Blocks kept only because ANOTHER query needs them add only sub-theta
+    candidates to q — the OR is a superset of each query's own keep set.
+    Kept blocks are decoded in contiguous runs via ``codec.slice_blocks``;
+    skipped blocks' bytes are never varint-decoded.
 
     ``stats_only=True`` returns (term_id, blocks_total, blocks_decoded)
-    — the batch twin of ``distributed_pruning_stats``.
+    per segment row instead — the same selection, observable without
+    shipping postings (``batched_pruning_stats``).
     """
+    if not term_specs and not stats_only:
+        return _decode_tf_df(seg_rows)
     import pyarrow as pa
 
     def _q_keep(
@@ -922,7 +819,9 @@ def search_segments(
 
 
 # --------------------------------------------------------------------------
-# Block-max pruned top-k (disjunctive S scoring)
+# Score-ordered top-k (disjunctive S). One kernel per route, parameterized
+# by scorer: the reference's TF-IDF, or BM25 (the north-rule upgrade — the
+# reference itself only has TF-IDF).
 # --------------------------------------------------------------------------
 
 
@@ -931,57 +830,64 @@ def _collect_topk(df: DataFrame) -> list[tuple[int, float]]:
     return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
 
 
-def topk_exhaustive(
-    di: DiskIndex,
-    query: str,
-    k: int = 10,
-    max_driver_postings: int = MAX_DRIVER_POSTINGS,
-) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive top-k by S — the oracle for topk_wand.
-    Routes to the executor-side plan above the driver valves."""
-    qtokens = tokenize_query(query)
-    if _route_distributed(di, sorted({t for t, _ in qtokens}), max_driver_postings):
-        return _collect_topk(topk_scores_distributed(di, query, k, "tfidf"))
-    segs = fetch_term_segments(di, [t for t, _ in qtokens])
+def _check_k(k: int) -> None:
+    if k < 1:
+        raise ValueError(f"top-k needs k >= 1, got k={k}")
+
+
+def _bm25_idf(n_docs: int, df: int) -> float:
+    """Lucene-form BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5)) — always
+    positive, mirrored exactly in the SQL oracle."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _idf(scorer: str, n_docs: int, df: int) -> float:
+    return _bm25_idf(n_docs, df) if scorer == "bm25" else math.log(n_docs / df)
+
+
+def _posting_contrib(di: DiskIndex, scorer: str):
+    """Driver-route per-posting contribution f(doc_ids, tf, idf) → float64.
+
+    BM25: idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)), dl read from
+    the driver dl cache; TF-IDF: (1 + ln tf)·idf. Both expression trees
+    match the DuckDB oracle term-for-term, so float64 results agree
+    bit-for-bit."""
+    if scorer != "bm25":
+        return lambda doc_ids, npos, idf: (1.0 + np.log(npos.astype(np.float64))) * idf
+    ids, dl = di.doc_lengths()
+    avgdl = di.avgdl()
+
+    def bm25(doc_ids, npos, idf):
+        dld = dl[np.searchsorted(ids, doc_ids)].astype(np.float64)
+        tf = npos.astype(np.float64)
+        return idf * (
+            tf * (BM25_K1 + 1.0)
+            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * (dld / avgdl)))
+        )
+
+    return bm25
+
+
+def _exhaustive_loop(terms: list[TermSegment], idfs, contrib, scorer: str, k: int):
+    """Score every posting of every term — the oracle for ``_wand_loop``."""
     acc: dict[int, float] = {}
-    for tid in segs:
-        seg = segs[tid]
-        doc_ids, _, npos, _ = seg.decode()
-        idf = math.log(di.meta.n_docs / seg.df)
-        contrib = (1.0 + np.log(npos.astype(np.float64))) * idf
-        for d, c in zip(doc_ids.tolist(), contrib.tolist()):
+    for s in terms:
+        doc_ids, _, npos, _ = s.decode()
+        for d, c in zip(doc_ids.tolist(), contrib(doc_ids, npos, idfs[s.term_id]).tolist()):
             acc[d] = acc.get(d, 0.0) + c
     return sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
 
 
-def topk_wand(
-    di: DiskIndex,
-    query: str,
-    k: int = 10,
-    max_driver_postings: int = MAX_DRIVER_POSTINGS,
-) -> list[tuple[int, float]]:
-    """Block-max pruned top-k: [(doc_id, S)] — equals topk_exhaustive.
+def _wand_loop(terms: list[TermSegment], idfs, contrib, scorer: str, k: int):
+    """Block-max pruned top-k — equals ``_exhaustive_loop``.
 
-    Also records pruning stats on the function attribute ``last_stats``.
-    Above the driver valves (sum df > ``max_driver_postings`` or corpus >
-    ``MAX_DRIVER_DOCS``) the query runs as the executor-side plan instead
-    — same result, driver memory O(k).
-    """
-    qtokens = tokenize_query(query)
-    if _route_distributed(di, sorted({t for t, _ in qtokens}), max_driver_postings):
-        topk_wand.last_stats = {"blocks_total": 0, "blocks_decoded": 0, "path": "distributed"}
-        return _collect_topk(topk_scores_distributed(di, query, k, "tfidf"))
-    segs = fetch_term_segments(di, [t for t, _ in qtokens])
-    if not segs:
-        topk_wand.last_stats = {"blocks_total": 0, "blocks_decoded": 0}
-        return []
-    term_list = list(segs.values())
-    n_corpus = di.meta.n_docs
-
-    # elementary doc-range segments from all block boundaries
-    idfs = {s.term_id: math.log(n_corpus / s.df) for s in term_list}
-    breakpoints = np.unique(np.concatenate([s.block_last for s in term_list]))
-    seg_hi = breakpoints  # inclusive
+    Elementary doc ranges come from all terms' block boundaries; a range's
+    bound is Σ_t ``_block_upper_bounds`` of its overlapping block (BM25
+    uses the dl→0 bound, so only the block_max_tf sidecar is read). Ranges
+    are visited in descending bound order, blocks decoded lazily via
+    ``codec.slice_blocks``, and the loop stops once the best remaining
+    bound cannot beat the running k-th score."""
+    seg_hi = np.unique(np.concatenate([s.block_last for s in terms]))  # inclusive
     seg_lo = np.empty_like(seg_hi)
     seg_lo[0] = 0
     seg_lo[1:] = seg_hi[:-1] + 1
@@ -989,29 +895,26 @@ def topk_wand(
     # per range, per term: overlapping block index (or -1)
     bounds = np.zeros(seg_hi.size)
     blk_of = {}
-    for s in term_list:
+    for s in terms:
         bi = np.searchsorted(s.block_last, seg_lo, side="left")
         in_range = bi < s.block_last.size
-        ub = np.zeros(seg_hi.size)
-        valid = in_range.copy()
         bi_c = np.clip(bi, 0, s.block_last.size - 1)
-        ub[valid] = (1.0 + np.log(s.block_max_tf[bi_c[valid]].astype(np.float64))) * idfs[s.term_id]
+        ub = np.zeros(seg_hi.size)
+        ub[in_range] = _block_upper_bounds(
+            s.block_max_tf[bi_c[in_range]], idfs[s.term_id], scorer
+        )
         bounds += ub
         blk_of[s.term_id] = np.where(in_range, bi_c, -1)
 
-    order = np.argsort(-bounds, kind="mergesort")
     top: list[tuple[float, int]] = []  # (score, doc)
     theta = -math.inf
     decoded: dict[tuple[int, int], tuple] = {}
-    blocks_decoded = 0
-    blocks_total = int(sum(s.block_last.size for s in term_list))
-
-    for r in order:
+    for r in np.argsort(-bounds, kind="mergesort"):
         if bounds[r] < theta and len(top) >= k:
             break  # every remaining range is strictly bounded below theta
         lo, hi = int(seg_lo[r]), int(seg_hi[r])
         doc_acc: dict[int, float] = {}
-        for s in term_list:
+        for s in terms:
             b = int(blk_of[s.term_id][r])
             if b < 0:
                 continue
@@ -1020,13 +923,12 @@ def topk_wand(
                 decoded[key] = codec.slice_blocks(
                     s.blob, s.block_offsets, int(s.df), b, b + 1
                 )
-                blocks_decoded += 1
             doc_ids, _, npos, _ = decoded[key]
             m = (doc_ids >= lo) & (doc_ids <= hi)
             if not m.any():
                 continue
-            contrib = (1.0 + np.log(npos[m].astype(np.float64))) * idfs[s.term_id]
-            for d, c in zip(doc_ids[m].tolist(), contrib.tolist()):
+            d_sel = doc_ids[m]
+            for d, c in zip(d_sel.tolist(), contrib(d_sel, npos[m], idfs[s.term_id]).tolist()):
                 doc_acc[d] = doc_acc.get(d, 0.0) + c
         for d, sc in doc_acc.items():
             top.append((sc, d))
@@ -1036,38 +938,84 @@ def topk_wand(
         if len(top) >= k:
             theta = top[-1][0]
     top.sort(key=lambda x: (-x[0], x[1]))
-    topk_wand.last_stats = {"blocks_total": blocks_total, "blocks_decoded": blocks_decoded}
     return [(d, sc) for sc, d in top[:k]]
 
 
-# --------------------------------------------------------------------------
-# BM25 top-k (north-rule scoring; the reference itself only has TF-IDF —
-# this is the documented upgrade, selectable alongside the parity scorer)
-# --------------------------------------------------------------------------
+def _topk_driver(loop, scorer: str):
+    """A public score-ordered entry point: one driver loop, one scorer.
 
-BM25_K1 = 1.2
-BM25_B = 0.75
+    ``(di, query, k, max_driver_postings) → [(doc_id, score)]`` over the
+    query's distinct terms. Above the driver valves (sum df >
+    ``max_driver_postings`` or corpus > ``MAX_DRIVER_DOCS``) the query
+    runs as ``topk_scores_distributed`` instead — same rows, driver memory
+    O(k), dl joined executor-side."""
+
+    def topk(
+        di: DiskIndex,
+        query: str,
+        k: int = 10,
+        max_driver_postings: int = MAX_DRIVER_POSTINGS,
+    ) -> list[tuple[int, float]]:
+        _check_k(k)
+        tids = sorted({t for t, _ in tokenize_query(query)})
+        if _route_distributed(di, tids, max_driver_postings):
+            return _collect_topk(topk_scores_distributed(di, query, k, scorer))
+        terms = list(fetch_term_segments(di, tids).values())
+        if not terms:
+            return []
+        idfs = {s.term_id: _idf(scorer, di.meta.n_docs, s.df) for s in terms}
+        return loop(terms, idfs, _posting_contrib(di, scorer), scorer, k)
+
+    return topk
 
 
-def _build_prune_meta(
-    seg_rows: DataFrame,
-    tids: list[int],
-    dfs: dict[int, int],
-    idfs: dict[int, float],
-    scorer: str,
-) -> tuple[dict[int, float], dict[int, _OverlapMeta]]:
-    """Pruning metadata for ``_decode_tf_pruned_df`` (single query).
+topk_exhaustive = _topk_driver(_exhaustive_loop, "tfidf")
+topk_wand = _topk_driver(_wand_loop, "tfidf")
+topk_bm25_exhaustive = _topk_driver(_exhaustive_loop, "bm25")
+topk_bm25_wand = _topk_driver(_wand_loop, "bm25")
 
-    Returns (big_rest, overlap): ``big_rest[t]`` = Σ ub of the OTHER terms
-    too big to ship ranges for (their help is granted unconditionally —
-    high df ⇒ low idf ⇒ small help); ``overlap[t]`` = the range metadata
-    + ub of each small term. See ``_collect_prune_meta`` for the two
-    metadata jobs and their cost bounds."""
-    ub, overlap = _collect_prune_meta(seg_rows, tids, dfs, idfs, scorer)
-    big_rest = {
-        t: sum(ub[u] for u in tids if u != t and u not in overlap) for t in tids
-    }
-    return big_rest, overlap
+
+def _route_distributed(di: DiskIndex, term_ids: list[int], max_driver_postings: int) -> bool:
+    """True when the score-ordered query must leave the driver: corpus too
+    big for the dl cache, or the query's terms exceed the postings valve.
+    Terms already LRU-resident skip the metadata scan (same fast path as
+    ``search_segments``)."""
+    if di.meta.n_docs > MAX_DRIVER_DOCS:
+        return True
+    if all(t in di.segment_cache for t in term_ids):
+        return False
+    dfs = _df_of_terms(di, term_ids)
+    return sum(dfs.values()) > max_driver_postings
+
+
+def _idf_case(idfs: dict[int, float]) -> Column:
+    """idf as a tiny CASE over term_id (constant-folded by Catalyst)."""
+    col = F.lit(0.0)
+    for t, v in idfs.items():
+        col = F.when(F.col("term_id") == t, F.lit(v)).otherwise(col)
+    return col
+
+
+def _contrib_col(
+    di: DiskIndex, tf_rows: DataFrame, idf: Column, scorer: str
+) -> tuple[DataFrame, Column]:
+    """Executor-route per-posting contribution: (rows, Column) for
+    (term_id, doc_id, tf) rows — the Column twin of ``_posting_contrib``,
+    same expression trees. BM25 first joins the doc-partitioned dl sidecar
+    (``DiskIndex.doc_length_df`` — never collected) on doc_id, a skew-free
+    shuffle join; TF-IDF needs no join."""
+    tf = F.col("tf").cast("double")
+    if scorer != "bm25":
+        return tf_rows, (1.0 + F.log(tf)) * idf
+    avgdl = di.avgdl()
+    return tf_rows.join(di.doc_length_df(), "doc_id"), idf * (
+        tf * (BM25_K1 + 1.0)
+        / (
+            tf
+            + BM25_K1
+            * (1.0 - BM25_B + BM25_B * (F.col("dl").cast("double") / avgdl))
+        )
+    )
 
 
 def _collect_prune_meta(
@@ -1132,46 +1080,6 @@ def _collect_prune_meta(
     return ub, overlap
 
 
-def _theta_probe(
-    di: DiskIndex,
-    seg_rows: DataFrame,
-    probe_tid: int,
-    idf: float,
-    k: int,
-    scorer: str,
-) -> float:
-    """Seed theta with the k-th largest single-term contribution of the
-    RAREST query term (cheapest full decode by construction). Valid lower
-    bound: those k docs' true totals are >= their probe contributions, so
-    the true k-th best total >= this value. Returns -inf when the term
-    has fewer than k postings (no pruning possible yet)."""
-    tf_rows = _decode_tf_df(seg_rows.filter(F.col("term_id") == probe_tid))
-    tf = F.col("tf").cast("double")
-    if scorer == "bm25":
-        avgdl = di.avgdl()
-        scored = tf_rows.join(di.doc_length_df(), "doc_id")
-        contrib = F.lit(idf) * (
-            tf * (BM25_K1 + 1.0)
-            / (
-                tf
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * (F.col("dl").cast("double") / avgdl))
-            )
-        )
-    else:
-        scored = tf_rows
-        contrib = (1.0 + F.log(tf)) * F.lit(idf)
-    vals = (
-        scored.select(contrib.alias("_c"))
-        .orderBy(F.desc("_c"))
-        .limit(k)
-        .collect()
-    )
-    if len(vals) < k:
-        return -math.inf
-    return float(vals[-1]["_c"])
-
-
 def _theta_probe_many(
     di: DiskIndex,
     seg_rows: DataFrame,
@@ -1180,103 +1088,136 @@ def _theta_probe_many(
     k: int,
     scorer: str,
 ) -> dict[int, float]:
-    """Batched theta seed: the k-th largest single-term contribution of
-    EVERY probe term in one job (the per-query rarest terms, deduped).
-    Returns {term_id: theta}; terms with fewer than k postings map to
-    −inf (no pruning possible for queries probing through them).
+    """Theta seed: the k-th largest single-term contribution of EVERY
+    probe term (the per-query rarest terms, deduped) in one job. Returns
+    {term_id: theta}; terms with fewer than k postings map to −inf (no
+    pruning possible for queries probing through them).
 
-    Same lower-bound argument as ``_theta_probe``, evaluated per term via
-    one decode of the probe terms' postings + a per-term rank window.
-    The window's per-term reducer sorts only that term's contributions —
-    bounded by the PROBE term's df, which is each query's MINIMUM df by
-    construction (the whole point of probing the rarest term), not a
-    full-candidate sort."""
-    from pyspark.sql import Window
-
-    tf_rows = _decode_tf_df(
-        seg_rows.filter(F.col("term_id").isin(sorted(probe_tids)))
+    Valid lower bound: the probe term's k best docs have true totals >=
+    their probe contributions, so the query's true k-th best total >= the
+    k-th probe contribution. The rarest term is the cheapest full decode
+    by construction. One probe term runs as a TakeOrdered limit; several
+    run as one per-term rank window, whose reducer sorts only that term's
+    contributions (bounded by its df — each query's MINIMUM df)."""
+    tf_rows = _decode_tf_df(seg_rows.filter(F.col("term_id").isin(probe_tids)))
+    scored, contrib = _contrib_col(
+        di, tf_rows, _idf_case({t: idfs[t] for t in probe_tids}), scorer
     )
-    tf = F.col("tf").cast("double")
-    idf_col = F.lit(0.0)
-    for t in probe_tids:
-        idf_col = F.when(F.col("term_id") == t, F.lit(idfs[t])).otherwise(idf_col)
-    if scorer == "bm25":
-        avgdl = di.avgdl()
-        scored = tf_rows.join(di.doc_length_df(), "doc_id")
-        contrib = idf_col * (
-            tf * (BM25_K1 + 1.0)
-            / (
-                tf
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * (F.col("dl").cast("double") / avgdl))
-            )
-        )
+    scored = scored.select("term_id", contrib.alias("_c"))
+    if len(probe_tids) == 1:
+        rows = scored.orderBy(F.desc("_c")).limit(k).collect()[k - 1 :]
     else:
-        scored = tf_rows
-        contrib = (1.0 + F.log(tf)) * idf_col
-    w = Window.partitionBy("term_id").orderBy(F.desc("_c"))
-    rows = (
-        scored.select("term_id", contrib.alias("_c"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == k)
-        .collect()
-    )
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("term_id").orderBy(F.desc("_c"))
+        rows = (
+            scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == k)
+            .collect()
+        )
     thetas = {t: -math.inf for t in probe_tids}
     for r in rows:
         thetas[int(r["term_id"])] = float(r["_c"])
     return thetas
 
 
-def _distributed_query_setup(di: DiskIndex, query: str, scorer: str):
-    """Shared front half of the distributed top-k and its stats twin:
-    (tids, idfs, pruned seg_rows scan) or None when no term matches."""
+def _batched_prune_setup(
+    di: DiskIndex,
+    queries: list[tuple[str, str]],
+    k: int,
+    scorer: str,
+):
+    """Shared front half of every executor-route top-k: tokenize every
+    query, resolve df/idf for the UNION of terms, build the pruned scan,
+    and assemble the per-query prune specs (shared metadata pass + theta
+    probe). ``topk_scores_distributed`` is the Q=1 case.
+
+    Returns None when no query has an indexed term, else
+    (per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid) where
+    ``term_specs[t]`` feeds ``_decode_tf_pruned_many_df`` and is empty
+    when nothing can be pruned (all queries single-term or thinner than
+    k)."""
     from ..functions.xxhash import bucket_of_term
 
-    qtokens = tokenize_query(query)
-    tids = sorted({t for t, _ in qtokens})
-    dfs = _df_of_terms(di, tids)
-    tids = [t for t in tids if dfs.get(t, 0) > 0]
-    if not tids:
+    _check_k(k)
+    per_q: dict[str, list[int]] = {}
+    for qid, q in queries:
+        if qid in per_q:
+            raise ValueError(f"duplicate qid {qid!r} in the query set")
+        per_q[qid] = sorted({t for t, _ in tokenize_query(q)})
+    union = sorted({t for tids in per_q.values() for t in tids})
+    dfs = _df_of_terms(di, union) if union else {}
+    union = [t for t in union if dfs.get(t, 0) > 0]
+    if not union:
         return None
-    n = di.meta.n_docs
-    if scorer == "bm25":
-        idfs = {t: _bm25_idf(n, dfs[t]) for t in tids}
-    else:
-        idfs = {t: math.log(n / dfs[t]) for t in tids}
-    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in tids})
+    per_q = {
+        qid: [t for t in tids if t in set(union)] for qid, tids in per_q.items()
+    }
+    idfs = {t: _idf(scorer, di.meta.n_docs, dfs[t]) for t in union}
+    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in union})
     seg_rows = di.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(tids)
+        F.col("bucket").isin(buckets) & F.col("term_id").isin(union)
     )
-    return tids, dfs, idfs, seg_rows
-
-
-def distributed_pruning_stats(
-    di: DiskIndex, query: str, k: int = 10, scorer: str = "bm25"
-) -> dict:
-    """Block-selection stats of the pruned distributed plan (no postings
-    shipped): {"blocks_total", "blocks_decoded", "theta"} — the executor
-    twin of ``topk_wand.last_stats``, driven through the SAME selection
-    kernel (``_decode_tf_pruned_df(stats_only=True)``)."""
-    setup = _distributed_query_setup(di, query, scorer)
-    if setup is None:
-        return {"blocks_total": 0, "blocks_decoded": 0, "theta": -math.inf}
-    tids, dfs, idfs, seg_rows = setup
-    theta = -math.inf
-    big_rest = {t: 0.0 for t in tids}
+    multi = {qid: tids for qid, tids in per_q.items() if len(tids) > 1}
+    term_specs: dict[int, list[dict]] = {}
     overlap: dict[int, _OverlapMeta] = {}
-    if len(tids) > 1:
-        big_rest, overlap = _build_prune_meta(seg_rows, tids, dfs, idfs, scorer)
-        rarest = min(tids, key=lambda t: dfs[t])
-        theta = _theta_probe(di, seg_rows, rarest, idfs[rarest], k, scorer)
-    rows = _decode_tf_pruned_df(
-        seg_rows, idfs, big_rest, overlap, theta, scorer, stats_only=True
-    ).agg(
+    thetas_by_qid: dict[str, float] = {qid: -math.inf for qid in per_q}
+    if multi:
+        ub, overlap = _collect_prune_meta(seg_rows, union, dfs, idfs, scorer)
+        probe_tid = {
+            qid: min(tids, key=lambda t: dfs[t]) for qid, tids in multi.items()
+        }
+        thetas = _theta_probe_many(
+            di, seg_rows, sorted(set(probe_tid.values())), idfs, k, scorer
+        )
+        for qid, tids in per_q.items():
+            if not tids:
+                continue
+            # single-term queries keep all their blocks (theta = -inf):
+            # the probe WOULD be the whole job
+            theta = thetas[probe_tid[qid]] if qid in multi else -math.inf
+            thetas_by_qid[qid] = theta
+            spec = {
+                "theta": theta,
+                "big_rest": {
+                    t: sum(
+                        ub[u] for u in tids if u != t and u not in overlap
+                    )
+                    for t in tids
+                },
+                "small": {t for t in tids if t in overlap},
+            }
+            for t in tids:
+                term_specs.setdefault(t, []).append(spec)
+        if all(not math.isfinite(s["theta"]) for ss in term_specs.values() for s in ss):
+            term_specs = {}  # nothing prunable: skip the pruned kernel
+    return per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid
+
+
+def batched_pruning_stats(
+    di: DiskIndex,
+    queries: list[tuple[str, str]],
+    k: int = 10,
+    scorer: str = "bm25",
+) -> dict:
+    """Block-selection stats of the executor-route plan (no postings
+    shipped): {"blocks_total", "blocks_decoded", "theta": {qid: theta}} —
+    the same selection code path as ``topk_scores_many`` (and, for one
+    query, ``topk_scores_distributed``) with ``stats_only=True``."""
+    setup = _batched_prune_setup(di, queries, k, scorer)
+    if setup is None:
+        return {"blocks_total": 0, "blocks_decoded": 0, "theta": {}}
+    _, idfs, seg_rows, term_specs, overlap, thetas = setup
+    stats = _decode_tf_pruned_many_df(
+        seg_rows, idfs, term_specs, overlap, scorer, stats_only=True
+    )
+    agg = stats.agg(
         F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
     ).collect()[0]
     return {
-        "blocks_total": int(rows["t"] or 0),
-        "blocks_decoded": int(rows["d"] or 0),
-        "theta": theta,
+        "blocks_total": int(agg["t"] or 0),
+        "blocks_decoded": int(agg["d"] or 0),
+        "theta": thetas,
     }
 
 
@@ -1284,72 +1225,40 @@ def topk_scores_distributed(
     di: DiskIndex, query: str, k: int = 10, scorer: str = "bm25"
 ) -> DataFrame:
     """Executor-side disjunctive top-k — the cluster-scale twin of the
-    driver block-max routes (VERDICT r2 #2; reference read path
+    driver routes (reference read path
     /root/reference/index/core/search.go:187-273 at cluster scale).
 
     Physical plan (everything stays in Spark; the driver sees k rows):
 
-    - pruned segment scan (bucket partition pruning + term_id pushdown)
-      → mapInArrow BLOCK-MAX-PRUNED blob decode to (term_id, doc_id, tf):
-      theta is seeded by a driver probe of the rarest term's top-k
-      contributions (one small job), each other term's "maximal help" is
-      a metadata-only max over block_max_tf, and the kernel skips every
-      block whose bound cannot reach theta − ε before varint-decoding it
-      (``_decode_tf_pruned_df`` — the result stays EXACT, see its
-      soundness note). Single-term queries skip the probe (it would be
-      the whole job);
-    - ``scorer='bm25'``: join the doc-partitioned dl sidecar
-      (``DiskIndex.doc_length_df`` — a column of the doc store, NEVER
-      collected) on doc_id — a skew-free shuffle join;
-      ``scorer='tfidf'``: no join at all (S = (1+ln tf)·ln(N/df));
-    - per-row contribution as a column expression (idf is a tiny CASE
-      over the query's terms, built from the pruned METADATA df scan);
+    - front half shared with ``topk_scores_many`` at Q=1
+      (``_batched_prune_setup``): pruned segment scan (bucket partition
+      pruning + term_id pushdown) → ``_decode_tf_pruned_many_df``, the
+      BLOCK-MAX-PRUNED blob decode to (term_id, doc_id, tf). A multi-term
+      query pays three small jobs (metadata max, small-term ranges, a
+      TakeOrdered rarest-term theta probe) to skip whole blocks of the hot
+      terms' O(df) decode; single-term queries and probes thinner than k
+      decode every block;
+    - ``_contrib_col``: BM25 joins the dl sidecar, TF-IDF needs no join;
+      idf is a tiny CASE over the query's terms;
     - groupBy(doc_id).sum → orderBy(round(score,6) desc, doc_id).limit(k),
       which Catalyst executes as TakeOrderedAndProject: each partition
-      emits its local k, the driver merges k-sized heaps.
+      emits its local k, the driver merges k-sized heaps. The batched
+      tail (partial top-k + rank window) measured +46% top-k p50 at Q=1
+      on a 4-vCPU host, so only the front half is shared.
 
     Returns a DataFrame (doc_id, score) — identical rows to the
     exhaustive plan (winners' sums are never truncated by the pruning).
     """
-    setup = _distributed_query_setup(di, query, scorer)
-    empty = di.empty_result().select("doc_id", "score")
+    setup = _batched_prune_setup(di, [("q", query)], k, scorer)
     if setup is None:
-        return empty
-    tids, dfs, idfs, seg_rows = setup
-
-    if len(tids) > 1:
-        # multi-term: pay three small jobs (metadata max, small-term
-        # ranges, rarest-term theta probe) to skip whole blocks of the
-        # hot terms' O(df) decode
-        big_rest, overlap = _build_prune_meta(seg_rows, tids, dfs, idfs, scorer)
-        rarest = min(tids, key=lambda t: dfs[t])
-        theta = _theta_probe(di, seg_rows, rarest, idfs[rarest], k, scorer)
-        if math.isinf(theta):
-            tf_rows = _decode_tf_df(seg_rows)
-        else:
-            tf_rows = _decode_tf_pruned_df(
-                seg_rows, idfs, big_rest, overlap, theta, scorer
-            )
-    else:
-        tf_rows = _decode_tf_df(seg_rows)
-    idf_col = F.lit(0.0)
-    for t in tids:
-        idf_col = F.when(F.col("term_id") == t, F.lit(idfs[t])).otherwise(idf_col)
-    tf = F.col("tf").cast("double")
-    if scorer == "bm25":
-        avgdl = di.avgdl()
-        scored = tf_rows.join(di.doc_length_df(), "doc_id")
-        contrib = idf_col * (
-            tf * (BM25_K1 + 1.0)
-            / (
-                tf
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * (F.col("dl").cast("double") / avgdl))
-            )
-        )
-    else:
-        scored = tf_rows
-        contrib = (1.0 + F.log(tf)) * idf_col
+        return di.empty_result().select("doc_id", "score")
+    _, idfs, seg_rows, term_specs, overlap, _ = setup
+    scored, contrib = _contrib_col(
+        di,
+        _decode_tf_pruned_many_df(seg_rows, idfs, term_specs, overlap, scorer),
+        _idf_case(idfs),
+        scorer,
+    )
     # k-boundary ties are ordered by ROUND(score, 6) DESC, doc_id — the
     # oracle's tie semantics — not by raw float: partial-agg order in the
     # sum is nondeterministic, so raw scores can differ in the last ulp
@@ -1361,166 +1270,6 @@ def topk_scores_distributed(
         .orderBy(F.round(F.col("score"), 6).desc(), F.asc("doc_id"))
         .limit(k)
     )
-
-
-def _route_distributed(di: DiskIndex, term_ids: list[int], max_driver_postings: int) -> bool:
-    """True when the score-ordered query must leave the driver: corpus too
-    big for the dl cache, or the query's terms exceed the postings valve.
-    Terms already LRU-resident skip the metadata scan (same fast path as
-    ``search_segments``)."""
-    if di.meta.n_docs > MAX_DRIVER_DOCS:
-        return True
-    if all(t in di.segment_cache for t in term_ids):
-        return False
-    dfs = _df_of_terms(di, term_ids)
-    return sum(dfs.values()) > max_driver_postings
-
-
-def _bm25_idf(n_docs: int, df: int) -> float:
-    """Lucene-form BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5)) — always
-    positive, mirrored exactly in the SQL oracle."""
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-def topk_bm25_exhaustive(
-    di: DiskIndex,
-    query: str,
-    k: int = 10,
-    max_driver_postings: int = MAX_DRIVER_POSTINGS,
-) -> list[tuple[int, float]]:
-    """Exhaustive disjunctive BM25 top-k: [(doc_id, score)].
-
-    score(d) = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
-    The expression tree matches the DuckDB oracle term-for-term so float64
-    results agree bit-for-bit. Routes to the executor-side plan above the
-    driver valves (dl then stays a joined sidecar, never collected)."""
-    qtokens = tokenize_query(query)
-    if _route_distributed(di, sorted({t for t, _ in qtokens}), max_driver_postings):
-        return _collect_topk(topk_scores_distributed(di, query, k, "bm25"))
-    segs = fetch_term_segments(di, sorted({t for t, _ in qtokens}))
-    if not segs:
-        return []
-    ids, dl = di.doc_lengths()
-    avgdl = di.avgdl()
-    n = di.meta.n_docs
-    acc: dict[int, float] = {}
-    for seg in segs.values():
-        doc_ids, _, npos, _ = seg.decode()
-        idf = _bm25_idf(n, seg.df)
-        d_idx = np.searchsorted(ids, doc_ids)
-        dld = dl[d_idx].astype(np.float64)
-        tf = npos.astype(np.float64)
-        contrib = idf * (
-            tf * (BM25_K1 + 1.0)
-            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * (dld / avgdl)))
-        )
-        for d, c in zip(doc_ids.tolist(), contrib.tolist()):
-            acc[d] = acc.get(d, 0.0) + c
-    return sorted(acc.items(), key=lambda x: (-x[1], x[0]))[:k]
-
-
-def topk_bm25_wand(
-    di: DiskIndex,
-    query: str,
-    k: int = 10,
-    max_driver_postings: int = MAX_DRIVER_POSTINGS,
-) -> list[tuple[int, float]]:
-    """Block-max pruned BM25 top-k — equals topk_bm25_exhaustive.
-
-    Per-block upper bound: BM25's tf term is increasing in tf and
-    decreasing in dl, so idf·(k1+1)·tf_max/(tf_max + k1·(1−b)) (i.e.
-    dl→0) bounds every doc in the block using only the block_max_tf
-    sidecar — no schema change. Records ``last_stats`` like topk_wand.
-    Above the driver valves the query runs as the executor-side plan
-    (same result, driver memory O(k), dl joined executor-side).
-    """
-    qtokens = tokenize_query(query)
-    if _route_distributed(di, sorted({t for t, _ in qtokens}), max_driver_postings):
-        topk_bm25_wand.last_stats = {
-            "blocks_total": 0,
-            "blocks_decoded": 0,
-            "path": "distributed",
-        }
-        return _collect_topk(topk_scores_distributed(di, query, k, "bm25"))
-    segs = fetch_term_segments(di, sorted({t for t, _ in qtokens}))
-    if not segs:
-        topk_bm25_wand.last_stats = {"blocks_total": 0, "blocks_decoded": 0}
-        return []
-    term_list = list(segs.values())
-    n_corpus = di.meta.n_docs
-    ids, dl = di.doc_lengths()
-    avgdl = di.avgdl()
-    idfs = {s.term_id: _bm25_idf(n_corpus, s.df) for s in term_list}
-
-    def _ub(tf_max: np.ndarray, idf: float) -> np.ndarray:
-        tf = tf_max.astype(np.float64)
-        return idf * (tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * (1.0 - BM25_B)))
-
-    breakpoints = np.unique(np.concatenate([s.block_last for s in term_list]))
-    seg_hi = breakpoints
-    seg_lo = np.empty_like(seg_hi)
-    seg_lo[0] = 0
-    seg_lo[1:] = seg_hi[:-1] + 1
-
-    bounds = np.zeros(seg_hi.size)
-    blk_of = {}
-    for s in term_list:
-        bi = np.searchsorted(s.block_last, seg_lo, side="left")
-        in_range = bi < s.block_last.size
-        ub = np.zeros(seg_hi.size)
-        bi_c = np.clip(bi, 0, s.block_last.size - 1)
-        ub[in_range] = _ub(s.block_max_tf[bi_c[in_range]], idfs[s.term_id])
-        bounds += ub
-        blk_of[s.term_id] = np.where(in_range, bi_c, -1)
-
-    order = np.argsort(-bounds, kind="mergesort")
-    top: list[tuple[float, int]] = []
-    theta = -math.inf
-    decoded: dict[tuple[int, int], tuple] = {}
-    blocks_decoded = 0
-    blocks_total = int(sum(s.block_last.size for s in term_list))
-
-    for r in order:
-        if bounds[r] < theta and len(top) >= k:
-            break
-        lo, hi = int(seg_lo[r]), int(seg_hi[r])
-        doc_acc: dict[int, float] = {}
-        for s in term_list:
-            b = int(blk_of[s.term_id][r])
-            if b < 0:
-                continue
-            key = (s.term_id, b)
-            if key not in decoded:
-                decoded[key] = codec.slice_blocks(
-                    s.blob, s.block_offsets, int(s.df), b, b + 1
-                )
-                blocks_decoded += 1
-            doc_ids, _, npos, _ = decoded[key]
-            m = (doc_ids >= lo) & (doc_ids <= hi)
-            if not m.any():
-                continue
-            d_sel = doc_ids[m]
-            dld = dl[np.searchsorted(ids, d_sel)].astype(np.float64)
-            tf = npos[m].astype(np.float64)
-            contrib = idfs[s.term_id] * (
-                tf * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * (dld / avgdl)))
-            )
-            for d, c in zip(d_sel.tolist(), contrib.tolist()):
-                doc_acc[d] = doc_acc.get(d, 0.0) + c
-        for d, sc in doc_acc.items():
-            top.append((sc, d))
-        if len(top) > k:
-            top.sort(key=lambda x: (-x[0], x[1]))
-            del top[k:]
-        if len(top) >= k:
-            theta = top[-1][0]
-    top.sort(key=lambda x: (-x[0], x[1]))
-    topk_bm25_wand.last_stats = {
-        "blocks_total": blocks_total,
-        "blocks_decoded": blocks_decoded,
-    }
-    return [(d, sc) for sc, d in top[:k]]
 
 
 def _partial_topk_df(agg_rows: DataFrame, k: int) -> DataFrame:
@@ -1583,108 +1332,6 @@ def _partial_topk_df(agg_rows: DataFrame, k: int) -> DataFrame:
     return agg_rows.mapInArrow(kernel, "qid string, doc_id long, score double")
 
 
-def _batched_prune_setup(
-    di: DiskIndex,
-    queries: list[tuple[str, str]],
-    k: int,
-    scorer: str,
-):
-    """Shared front half of ``topk_scores_many`` and
-    ``batched_pruning_stats``: tokenize every query, resolve df/idf for
-    the UNION of terms, build the pruned scan, and assemble the per-query
-    prune specs (shared metadata pass + batched theta probe).
-
-    Returns None when no query has an indexed term, else
-    (per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid) where
-    ``term_specs[t]`` feeds ``_decode_tf_pruned_many_df`` and is empty
-    when nothing can be pruned (all queries single-term or thinner than
-    k)."""
-    from ..functions.xxhash import bucket_of_term
-
-    per_q = {
-        qid: sorted({t for t, _ in tokenize_query(q)}) for qid, q in queries
-    }
-    union = sorted({t for tids in per_q.values() for t in tids})
-    dfs = _df_of_terms(di, union) if union else {}
-    union = [t for t in union if dfs.get(t, 0) > 0]
-    if not union:
-        return None
-    per_q = {
-        qid: [t for t in tids if t in set(union)] for qid, tids in per_q.items()
-    }
-    n = di.meta.n_docs
-    if scorer == "bm25":
-        idfs = {t: _bm25_idf(n, dfs[t]) for t in union}
-    else:
-        idfs = {t: math.log(n / dfs[t]) for t in union}
-    buckets = sorted({bucket_of_term(t, di.meta.n_buckets) for t in union})
-    seg_rows = di.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(union)
-    )
-    multi = {qid: tids for qid, tids in per_q.items() if len(tids) > 1}
-    term_specs: dict[int, list[dict]] = {}
-    overlap: dict[int, _OverlapMeta] = {}
-    thetas_by_qid: dict[str, float] = {qid: -math.inf for qid in per_q}
-    if multi:
-        ub, overlap = _collect_prune_meta(seg_rows, union, dfs, idfs, scorer)
-        probe_tid = {
-            qid: min(tids, key=lambda t: dfs[t]) for qid, tids in multi.items()
-        }
-        thetas = _theta_probe_many(
-            di, seg_rows, sorted(set(probe_tid.values())), idfs, k, scorer
-        )
-        for qid, tids in per_q.items():
-            if not tids:
-                continue
-            # single-term queries keep all their blocks (theta = -inf):
-            # the probe WOULD be the whole job, same routing as the
-            # single-query plan
-            theta = thetas[probe_tid[qid]] if qid in multi else -math.inf
-            thetas_by_qid[qid] = theta
-            spec = {
-                "theta": theta,
-                "big_rest": {
-                    t: sum(
-                        ub[u] for u in tids if u != t and u not in overlap
-                    )
-                    for t in tids
-                },
-                "small": {t for t in tids if t in overlap},
-            }
-            for t in tids:
-                term_specs.setdefault(t, []).append(spec)
-        if all(not math.isfinite(s["theta"]) for ss in term_specs.values() for s in ss):
-            term_specs = {}  # nothing prunable: skip the pruned kernel
-    return per_q, idfs, seg_rows, term_specs, overlap, thetas_by_qid
-
-
-def batched_pruning_stats(
-    di: DiskIndex,
-    queries: list[tuple[str, str]],
-    k: int = 10,
-    scorer: str = "bm25",
-) -> dict:
-    """Block-selection stats of the batched plan (no postings shipped):
-    {"blocks_total", "blocks_decoded", "theta": {qid: theta}} — the
-    multi-query twin of ``distributed_pruning_stats``, same selection
-    code path as ``topk_scores_many`` with ``stats_only=True``."""
-    setup = _batched_prune_setup(di, queries, k, scorer)
-    if setup is None:
-        return {"blocks_total": 0, "blocks_decoded": 0, "theta": {}}
-    _, idfs, seg_rows, term_specs, overlap, thetas = setup
-    stats = _decode_tf_pruned_many_df(
-        seg_rows, idfs, term_specs, overlap, scorer, stats_only=True
-    )
-    agg = stats.agg(
-        F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
-    ).collect()[0]
-    return {
-        "blocks_total": int(agg["t"] or 0),
-        "blocks_decoded": int(agg["d"] or 0),
-        "theta": thetas,
-    }
-
-
 def topk_scores_many(
     di: DiskIndex,
     queries: list[tuple[str, str]],
@@ -1703,15 +1350,14 @@ def topk_scores_many(
     tf rows to queries through a broadcast routing table:
 
     - pruned segment scan (bucket isin ∪buckets + term_id isin ∪terms —
-      partition pruning + predicate pushdown, same as the single-query
-      executor plan) → mapInArrow BLOCK-MAX-PRUNED blob decode to
-      (term_id, doc_id, tf), ONCE per term: each query q gets a theta_q
-      from a batched rarest-term probe (one job for all queries), and
-      block b of term t is decoded iff ANY query using t could still
-      place a doc from b in its top k — the OR of the per-query
-      single-query criteria (``_decode_tf_pruned_many_df``; verdict r4
-      #2). Single-term queries pin their terms to keep-all, matching the
-      single-query plan's routing;
+      partition pruning + predicate pushdown; the front half
+      ``_batched_prune_setup`` shared with ``topk_scores_distributed``)
+      → mapInArrow BLOCK-MAX-PRUNED blob decode to (term_id, doc_id, tf),
+      ONCE per term: each query q gets a theta_q from a batched
+      rarest-term probe (one job for all queries), and block b of term t
+      is decoded iff ANY query using t could still place a doc from b in
+      its top k (``_decode_tf_pruned_many_df``; verdict r4 #2).
+      Single-term queries pin their terms to keep-all;
     - ``scorer='bm25'``: ONE doc-partitioned dl-sidecar join BEFORE the
       per-query fan-out, so dl is joined per posting, not per
       (query × posting);
@@ -1731,9 +1377,10 @@ def topk_scores_many(
     ``topk_scores_distributed`` and ties at the k boundary use the same
     (round(score,6) DESC, doc_id) order, so each qid's rows match the
     single-query plan row-for-row. Queries whose tokens match no indexed
-    term contribute no rows. Query operators (``-x``/``site:``) are not
-    interpreted — the score-ordered family ranks the raw token bag, like
-    the single-query ``topk_*`` entry points."""
+    term contribute no rows; a repeated qid raises ``ValueError``. Query
+    operators (``-x``/``site:``) are not interpreted — the score-ordered
+    family ranks the raw token bag, like the single-query ``topk_*``
+    entry points."""
     from pyspark.sql import Window
 
     spark = di.segments.sparkSession
@@ -1746,28 +1393,15 @@ def topk_scores_many(
         (qid, t, idfs[t]) for qid, tids in per_q.items() for t in tids
     ]
     route_df = spark.createDataFrame(route, "qid string, term_id long, idf double")
-    if term_specs:
-        tf_rows = _decode_tf_pruned_many_df(
-            seg_rows, idfs, term_specs, overlap, scorer
-        )
-    else:
-        tf_rows = _decode_tf_df(seg_rows)
-    tf = F.col("tf").cast("double")
-    if scorer == "bm25":
-        avgdl = di.avgdl()
-        tf_rows = tf_rows.join(di.doc_length_df(), "doc_id")
-        contrib = F.col("idf") * (
-            tf * (BM25_K1 + 1.0)
-            / (
-                tf
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * (F.col("dl").cast("double") / avgdl))
-            )
-        )
-    else:
-        contrib = (1.0 + F.log(tf)) * F.col("idf")
+    # BM25 joins dl ONCE per posting, before the per-query fan-out
+    scored, contrib = _contrib_col(
+        di,
+        _decode_tf_pruned_many_df(seg_rows, idfs, term_specs, overlap, scorer),
+        F.col("idf"),
+        scorer,
+    )
     agg = (
-        tf_rows.join(F.broadcast(route_df), "term_id")
+        scored.join(F.broadcast(route_df), "term_id")
         .groupBy("qid", "doc_id")
         .agg(F.sum(contrib).alias("score"))
     )

@@ -278,7 +278,8 @@ LEFT JOIN abst a USING (doc_id)
 def bm25_topk_sql(query: str, k: int = 10) -> str:
     """Disjunctive BM25 top-k oracle → (doc_id, score, rank).
 
-    Mirrors operators/wand.topk_bm25_* term-for-term: Lucene-form idf
+    Mirrors the BM25 scorer of operators/wand (``_posting_contrib`` on the
+    driver, ``_contrib_col`` on executors) term-for-term: Lucene-form idf
     ln(1 + (N - df + 0.5)/(df + 0.5)); tf term tf·(k1+1)/(tf + k1·(1 − b
     + b·dl/avgdl)) with k1=1.2, b=0.75 written as the same expression
     tree (same IEEE evaluation order); dl = per-doc bigram count; avgdl
@@ -325,7 +326,9 @@ FROM sc ORDER BY ROUND(score, 6) DESC, doc_id LIMIT {k}
 def tfidf_topk_sql(query: str, k: int = 10) -> str:
     """Disjunctive TF-IDF top-k oracle → (doc_id, score, rank).
 
-    Mirrors operators/wand.topk_wand / topk_exhaustive term-for-term:
+    Mirrors the TF-IDF scorer of operators/wand term-for-term — the
+    driver loops ``_wand_loop`` / ``_exhaustive_loop`` behind topk_wand /
+    topk_exhaustive, and ``_contrib_col`` on the executor route:
     S(d) = Σ_t (1+ln tf_t)·ln(N/df_t) over the query's distinct matched
     terms, tf = combined title+body occurrence count (the reference's tf,
     search.go:423), no phrase/title boosts (the score-ordered family's

@@ -115,14 +115,6 @@ def test_wand_equals_exhaustive(spark, index_dir):
             assert abs(s1 - s2) < 1e-9
 
 
-def test_wand_prunes_blocks(spark, index_dir):
-    di = load_index(spark, index_dir)
-    wand.topk_wand(di, "table", 5)
-    st = wand.topk_wand.last_stats
-    assert st["blocks_total"] > 0
-    assert st["blocks_decoded"] <= st["blocks_total"]
-
-
 def test_resume_skips_completed_shards(spark, docs, tmp_path):
     path = str(tmp_path / "idx")
     write_index(docs, path, n_buckets=8, n_shards=2, n_salts=2, salt_threshold=50)
@@ -205,13 +197,6 @@ def test_bm25_wand_equals_exhaustive(spark, index_dir):
         a = wand.topk_bm25_wand(di, q, k)
         b = wand.topk_bm25_exhaustive(di, q, k)
         assert [(d, round(s, 9)) for d, s in a] == [(d, round(s, 9)) for d, s in b]
-
-
-def test_bm25_wand_prunes_blocks(spark, index_dir):
-    di = load_index(spark, index_dir)
-    wand.topk_bm25_wand(di, "table spark", 5)
-    st = wand.topk_bm25_wand.last_stats
-    assert st["blocks_total"] > 0 and st["blocks_decoded"] <= st["blocks_total"]
 
 
 def test_bm25_length_normalization_direction(spark, index_dir, docs):
