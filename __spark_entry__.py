@@ -20,31 +20,25 @@ from search_engine_spark.operators import events as E
 from search_engine_spark.operators import multimodal as MM
 from search_engine_spark.operators import similarity as SIM
 from search_engine_spark.operators import textstats as TS
-from search_engine_spark.operators.postings import (
-    Index,
-    build_documents_from_testdata,
-    build_index,
+from search_engine_spark.operators.postings import build_documents_from_testdata
+from search_engine_spark.operators.highlight import enrich_ranked
+from search_engine_spark.operators.search import paginate, parse_query
+from search_engine_spark.operators.segments import (
+    DiskIndex,
+    index_stats,
+    load_index,
+    write_index,
 )
-from search_engine_spark.operators.highlight import enrich_ranked, enrich_topk
-from search_engine_spark.operators.search import paginate, search
-from search_engine_spark.operators.segments import DiskIndex, load_index, write_index
 from search_engine_spark.operators.wand import (
+    fetch_term_segments,
     search_segments,
     topk_bm25_wand,
     topk_scores_many,
 )
-from search_engine_spark.functions.tokenizer import term_to_id
+from search_engine_spark.functions.tokenizer import term_to_id, tokenize_query
 from search_engine_spark.oracle import sqlgen
 
-_INDEX_CACHE: dict[str, Index] = {}
 _DISK_CACHE: dict[str, DiskIndex] = {}
-
-
-def _index(spark: SparkSession, sf_dir: str) -> Index:
-    if sf_dir not in _INDEX_CACHE:
-        docs = build_documents_from_testdata(spark, sf_dir).cache()
-        _INDEX_CACHE[sf_dir] = build_index(docs)
-    return _INDEX_CACHE[sf_dir]
 
 
 def _disk_index(spark: SparkSession, sf_dir: str) -> DiskIndex:
@@ -88,58 +82,37 @@ def _rounded_rank(r: DataFrame) -> DataFrame:
     )
 
 
-def _search_q(query: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _rounded_rank(search(_index(spark, sf_dir), query))
-
-    return run
-
-
-def _seg_search_q(query: str):
-    """Same query through the compressed blob path (segments + numpy
-    intersection/scoring) — checked against the SAME oracle SQL."""
+def _search_q(query: str, **route):
+    """Reference-semantics search over the disk index. ``route`` passes
+    through to ``search_segments``: ``max_driver_postings=0`` forces the
+    executor-side plan (mapInArrow blob decode, doc_id-grouped
+    intersection, join folds, TakeOrdered truncation) — every route is
+    checked against the SAME oracle SQL."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _rounded_rank(search_segments(_disk_index(spark, sf_dir), query))
-
-    return run
-
-
-def _dist_search_q(query: str):
-    """Same query FORCED through the executor-side hot-term plan
-    (max_driver_postings=0): mapInArrow blob decode, doc_id-grouped
-    intersection, join folds, TakeOrdered truncation — checked against
-    the SAME oracle SQL as the driver routes."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _rounded_rank(
-            search_segments(_disk_index(spark, sf_dir), query, max_driver_postings=0)
-        )
+        return _rounded_rank(search_segments(_disk_index(spark, sf_dir), query, **route))
 
     return run
 
 
 def _search_enriched_q(query: str, k: int = 10):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        idx = _index(spark, sf_dir)
-        r = _rounded_rank(search(idx, query)).filter(F.col("rank") <= k)
-        docs = idx.documents.select("doc_id", "url")
+        di = _disk_index(spark, sf_dir)
+        r = _rounded_rank(search_segments(di, query)).filter(F.col("rank") <= k)
+        docs = di.documents.select("doc_id", "url")
         return r.join(docs, "doc_id").select("doc_id", "url", "score", "rank")
 
     return run
 
 
 def _lexicon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _index(spark, sf_dir).lexicon.select("term", "df", "ctf")
+    return _disk_index(spark, sf_dir).lexicon.select("term", "df", "ctf")
 
 
 def _corpus_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = _index(spark, sf_dir)
-    a = idx.documents.agg(F.count("*").alias("n_docs"))
-    b = idx.postings.agg(
-        F.countDistinct("term_id").alias("n_terms"), F.count("*").alias("n_postings")
+    return index_stats(_disk_index(spark, sf_dir)).select(
+        "n_docs", "n_terms", "n_postings"
     )
-    return a.crossJoin(b)
 
 
 def _index_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,21 +122,34 @@ def _index_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     every one of them from the raw documents table. Projected to the
     corpus-derivable columns; layout/codec gauges (blob_bytes, avgdl,
     shards_complete) are pinned by tests/test_segments.py instead."""
-    from search_engine_spark.operators.segments import index_stats
-
     return index_stats(_disk_index(spark, sf_dir)).select(
         "n_docs", "n_terms", "n_postings", "total_ctf", "max_df", "total_dl"
     )
 
 
 def _postings_term_q(term: str):
+    """One term's postings decoded from its segment blob: per doc, tf and
+    the first/last position of the title ++ body position list."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        idx = _index(spark, sf_dir)
-        return idx.postings.filter(F.col("term_id") == term_to_id(term)).select(
-            "doc_id",
-            F.size("positions").cast("long").alias("tf"),
-            F.element_at("positions", 1).cast("long").alias("first_pos"),
-            F.element_at("positions", -1).cast("long").alias("last_pos"),
+        import pandas as pd
+
+        tid = term_to_id(term)
+        seg = fetch_term_segments(_disk_index(spark, sf_dir), [tid]).get(tid)
+        pdf = pd.DataFrame(columns=["doc_id", "tf", "first_pos", "last_pos"])
+        if seg is not None:
+            doc_ids, _, npos, pos = seg.decode()
+            starts = seg.pos_starts()
+            pdf = pd.DataFrame(
+                {
+                    "doc_id": doc_ids,
+                    "tf": npos,
+                    "first_pos": pos[starts],
+                    "last_pos": pos[starts + npos - 1],
+                }
+            )
+        return spark.createDataFrame(
+            pdf, "doc_id long, tf long, first_pos long, last_pos long"
         )
 
     return run
@@ -256,15 +242,16 @@ def _topk_many_q(scorer: str, k: int = 10):
 
 
 def _search_highlight_q(query: str, k: int = 10):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from search_engine_spark.functions.tokenizer import tokenize_query
-        from search_engine_spark.operators.search import parse_query, search
+    """The H1-H4 highlight pipeline served from the disk index (ranking
+    via segment blobs, enrichment via the index's doc store); ranking
+    feeds the kernel at 6 dp so ties rank identically in both engines."""
 
-        idx = _index(spark, sf_dir)
-        ranked = _rounded_rank(search(idx, query)).filter(F.col("rank") <= k)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        di = _disk_index(spark, sf_dir)
+        ranked = _rounded_rank(search_segments(di, query)).filter(F.col("rank") <= k)
         pq = parse_query(query)
         term_ids = [t for t, _ in tokenize_query(pq.keywords[0])] if pq.keywords else []
-        return enrich_ranked(idx, ranked, term_ids).select(
+        return enrich_ranked(di, ranked, term_ids).select(
             "doc_id", "score", "rank", "url", "abstract"
         )
 
@@ -309,26 +296,6 @@ def _media_thumbs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _seg_search_highlight_q(query: str, k: int = 10):
-    """The H1-H4 highlight pipeline served from the COMPRESSED disk index
-    (ranking via segment blobs, enrichment via the index's doc store) —
-    same SQL oracle as the logical-index search_highlight row."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from search_engine_spark.functions.tokenizer import tokenize_query
-        from search_engine_spark.operators.search import parse_query
-
-        di = _disk_index(spark, sf_dir)
-        ranked = _rounded_rank(search_segments(di, query)).filter(F.col("rank") <= k)
-        pq = parse_query(query)
-        term_ids = [t for t, _ in tokenize_query(pq.keywords[0])] if pq.keywords else []
-        return enrich_ranked(di, ranked, term_ids).select(
-            "doc_id", "score", "rank", "url", "abstract"
-        )
-
-    return run
-
-
 def _media_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr = MM.sample_frames(MM.synthesize_media(spark, 64), every_ms=500, dim=4)
     return fr.select(
@@ -359,18 +326,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "search_site": _search_q("table site:src3"),
         "search_rare": _search_q("dup"),
         # P9 pagination: page 2 of the ranked result (rank 11..20)
-        "search_page2": lambda s, d: paginate(
-            _rounded_rank(search(_index(s, d), "table")), 2
-        ),
+        "search_page2": lambda s, d: paginate(_search_q("table")(s, d), 2),
         "search_absent": _search_q("qqqq"),
         "search_enriched": _search_enriched_q("spark"),
-        "seg_search_table": _seg_search_q("table"),
-        "seg_search_and": _seg_search_q("table spark"),
-        "seg_search_not": _seg_search_q("table -dup"),
-        "seg_search_site": _seg_search_q("table site:src3"),
+        # seg_search_* (and seg_search_highlight) are the same disk-index
+        # driver route as search_*: the names stay stable for the oracle
+        "seg_search_table": _search_q("table"),
+        "seg_search_and": _search_q("table spark"),
+        "seg_search_not": _search_q("table -dup"),
+        "seg_search_site": _search_q("table site:src3"),
         # executor-side hot-term plan, forced — same oracle as seg_search_*
-        "dist_search_and": _dist_search_q("table spark"),
-        "dist_search_site": _dist_search_q("table site:src3"),
+        "dist_search_and": _search_q("table spark", max_driver_postings=0),
+        "dist_search_site": _search_q("table site:src3", max_driver_postings=0),
         # BM25 top-k through block-max pruning (north-rule scorer; the
         # pruning is lossless so the exhaustive SQL oracle value-checks it)
         "search_bm25_topk": _bm25_topk_q("table spark", k=10),
@@ -397,8 +364,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SQL (sqlgen.search_highlight_sql); ranking feeds the kernel at
         # 6 dp so ties rank identically in both engines
         "search_highlight": _search_highlight_q("table", k=10),
-        # the same H1-H4 pipeline through the compressed disk-index path
-        "seg_search_highlight": _seg_search_highlight_q("table", k=10),
+        "seg_search_highlight": _search_highlight_q("table", k=10),
         # --- training-data pipeline: dedup ---------------------------------
         "dedup_exact": lambda s, d: D.exact_dedup(_documents(s, d)),
         "dedup_jaccard": lambda s, d: D.ngram_jaccard_pairs(_documents(s, d)),

@@ -56,7 +56,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from search_engine_spark.session import _default_cpus
+
+    ap.add_argument("--cpus", default=_default_cpus())
     ap.add_argument(
         "--healthy-mops",
         type=float,
@@ -85,16 +87,10 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from search_engine_spark.operators import dedup as D
     from search_engine_spark.operators import similarity as SIM
     from search_engine_spark.operators import textstats as TS
-    from search_engine_spark.operators.postings import (
-        build_documents_from_testdata,
-        build_index,
-    )
-    from search_engine_spark.operators.search import search
+    from search_engine_spark.operators.postings import build_documents_from_testdata
     from search_engine_spark.session import get_spark
 
     spark = get_spark(
@@ -218,7 +214,7 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from search_engine_spark.operators.segments import load_index, write_index
+    from search_engine_spark.operators.segments import index_stats, load_index, write_index
     from search_engine_spark.operators.wand import search_segments, topk_wand
 
     docs = build_documents_from_testdata(spark, args.sf_dir).cache()
@@ -257,13 +253,7 @@ def main() -> None:
     for d in build_dirs[1:]:
         shutil.rmtree(os.path.dirname(d), ignore_errors=True)
     di = load_index(spark, index_dir)
-
-    # in-memory logical index (DataFrame query path, for comparison)
-    t0 = time.time()
-    index = build_index(docs)
-    n_postings = index.postings.count()
-    index.lexicon.count()
-    timings["index_build_logical"] = round(time.time() - t0, 3)
+    n_postings = index_stats(di).first()["n_postings"]
 
     # --- query side: compressed blob path (the product query engine) -------
     # Protocol (ADVICE r2): cold and warm are timed SEPARATELY. q_* = cold
@@ -352,7 +342,6 @@ def main() -> None:
         max_reps=2,
         reset=di.clear_caches,
     )
-    timed("q_df_single", lambda: search(index, "table").collect())
 
     # --- FIXTURES.md §4 query latency percentiles (verdict r3 #7) -------
     # Same workload as tools/scale_bench.py (REFERENCE_QUERY_SET over the

@@ -3,13 +3,14 @@ resume.
 
 Pipeline (SURVEY §3.1 re-architecture):
 
-    postings (term_id, doc_id, title_end, positions)
+    packed postings (term_id, doc_id, title_end, npos, pos_blob)
       → bucket = murmur3(term_id) % n_buckets     (term-partitioned index)
       → salt   = murmur3(doc_id) % n_salts for hot terms (df > threshold)
                  else 0                            (skew defeat, north rule)
-      → groupBy(bucket, salt).applyInPandas(encode kernel)
-           kernel sorts (term_id, doc_id), flattens positions, and calls
-           codec.encode_bucket — ONE vectorized varint pass per group
+      → groupBy(bucket, salt).applyInArrow(encode kernel)
+           kernel sorts (term_id, doc_id), splices the pre-packed position
+           bytes, and calls codec.encode_bucket_packed — ONE vectorized
+           varint pass per group
       → segments rows (term_id, salt, df, ctf, blob, block_* sidecar)
       → merge pass: hot terms' sub-segments sort-merged into one blob
 
@@ -52,67 +53,17 @@ SEGMENT_SCHEMA = (
 )
 
 
-def _encode_kernel_arrow(table: pa.Table) -> pa.Table:
-    """applyInArrow kernel for one (bucket, salt) group.
-
-    Arrow-native on purpose: a pandas kernel materializes one Python list
-    object PER ROW for the ``positions`` column (30M rows → 30M objects →
-    GC collapse); the Arrow ListArray exposes the same data as two flat
-    numpy arrays (values + offsets) with zero object churn. (The real
-    type hints are REQUIRED — applyInArrow infers its eval type from
-    them.)
-    """
-    t = table.combine_chunks()
-    term = t.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    te = t.column("title_end").to_numpy(zero_copy_only=False).astype(np.int64)
-    la = t.column("positions")
-    la = la.combine_chunks() if isinstance(la, pa.ChunkedArray) else la
-    offsets = la.offsets.to_numpy().astype(np.int64)
-    values = la.values.to_numpy(zero_copy_only=False).astype(np.int64)
-    counts = offsets[1:] - offsets[:-1]
-
-    order = np.lexsort((doc, term))
-    starts = offsets[:-1][order]
-    counts_o = counts[order]
-    total = int(counts_o.sum())
-    if total:
-        # ragged gather: flat positions in (term, doc) sorted row order
-        shift = np.repeat(
-            starts - np.concatenate(([0], np.cumsum(counts_o)[:-1])), counts_o
-        )
-        flat = values[shift + np.arange(total)]
-    else:
-        flat = np.empty(0, np.int64)
-
-    eb = codec.encode_bucket(term[order], doc[order], te[order], counts_o, flat)
-    n_terms = len(eb.term_ids)
-    bucket = int(t.column("bucket")[0].as_py()) if n_terms else 0
-    salt = int(t.column("salt")[0].as_py()) if n_terms else 0
-    return pa.table(
-        {
-            "bucket": pa.array(np.full(n_terms, bucket, np.int32), pa.int32()),
-            "term_id": pa.array(eb.term_ids, pa.int64()),
-            "salt": pa.array(np.full(n_terms, salt, np.int32), pa.int32()),
-            "df": pa.array(eb.dfs, pa.int64()),
-            "ctf": pa.array(eb.ctfs, pa.int64()),
-            "n_docs": pa.array(eb.dfs, pa.int64()),
-            "blob": pa.array(eb.blobs, pa.binary()),
-            "block_last": pa.array([a.tolist() for a in eb.block_last], pa.list_(pa.int64())),
-            "block_max_tf": pa.array([a.tolist() for a in eb.block_max_tf], pa.list_(pa.int32())),
-            "block_offsets": pa.array([a.tolist() for a in eb.block_offsets], pa.list_(pa.int64())),
-        }
-    )
-
-
 def _encode_kernel_packed(table: pa.Table) -> pa.Table:
-    """applyInArrow kernel for PRE-PACKED postings (pos_blob binary).
+    """applyInArrow kernel for one (bucket, salt) group of packed
+    postings (``build_postings_packed``).
 
     Positions arrived as per-doc delta+varint byte strings (packed
     map-side in the tokenizer kernel), so this kernel only varint-encodes
     the small integer streams and splices the position bytes — no
-    position re-encoding, no list materialization. Output blobs are
-    byte-identical to the list-path kernel (tested)."""
+    position re-encoding, no list materialization. Arrow-native on
+    purpose: the binary column is two flat numpy arrays (offsets + bytes)
+    with zero per-row object churn. (The real type hints are REQUIRED —
+    applyInArrow infers its eval type from them.)"""
     t = table.combine_chunks()
     term = t.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64)
     doc = t.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -164,21 +115,15 @@ def build_segments(
     n_salts: int = 8,
     salt_threshold: int = 250_000,
 ) -> DataFrame:
-    """postings -> compressed per-term segment rows.
+    """packed postings (``build_postings_packed``) -> compressed per-term
+    segment rows.
 
     Hot terms (df > salt_threshold) are split into ``n_salts``
     sub-segments by hashed doc_id so no single task encodes an entire
     pathological posting list; ``merge_salted`` fuses them afterwards.
     The groupBy keys (bucket, salt) give ~n_buckets×n_salts groups —
     size n_buckets so groups ≈ 2-4× parallelism at the target scale.
-
-    Accepts BOTH postings flavors: list form (``positions array<int>``,
-    from ``build_postings``) and packed form (``pos_blob binary`` from
-    ``build_postings_packed``) — the packed flavor shuffles ~4× fewer
-    bytes and splices instead of re-encoding. Output blobs are
-    byte-identical either way.
     """
-    packed = "pos_blob" in postings.columns
     df_per_term = postings.groupBy("term_id").agg(F.count("*").alias("_df"))
     hot = df_per_term.filter(F.col("_df") > salt_threshold).select("term_id")
     salted = (
@@ -193,8 +138,9 @@ def build_segments(
         )
         .drop("_hot")
     )
-    kernel = _encode_kernel_packed if packed else _encode_kernel_arrow
-    return salted.groupBy("bucket", "salt").applyInArrow(kernel, SEGMENT_SCHEMA)
+    return salted.groupBy("bucket", "salt").applyInArrow(
+        _encode_kernel_packed, SEGMENT_SCHEMA
+    )
 
 
 def merge_decoded_parts(
@@ -323,13 +269,16 @@ def _manifest_path(index_dir: str) -> str:
 
 
 def read_manifest(index_dir: str) -> dict[int, dict]:
+    """Batch shard rows by shard. A streaming index's manifest holds
+    ``gen``/``compact`` rows instead; those are skipped."""
     out: dict[int, dict] = {}
     p = _manifest_path(index_dir)
     if os.path.exists(p):
         with open(p) as f:
             for line in f:
                 row = json.loads(line)
-                out[row["shard"]] = row
+                if "shard" in row:
+                    out[row["shard"]] = row
     return out
 
 
@@ -354,8 +303,6 @@ def write_index(
     blob at build time (explicit compaction); the default leaves them
     segmented and lets the query path read-merge.
     """
-    from .postings import build_postings
-
     spark = documents.sparkSession
     os.makedirs(index_dir, exist_ok=True)
 
@@ -818,9 +765,11 @@ def index_stats(di: DiskIndex) -> DataFrame:
     CPU/memory gauges there are the cluster manager's job under Spark).
 
     Everything is served off control-plane artifacts, never posting
-    blobs: ``meta.json`` (n_docs, avgdl, layout), ``manifest.jsonl``
-    per-shard metrics (n_postings / blob_bytes, written by
-    ``write_index(collect_stats=True)``), and the lexicon table
+    blobs: ``meta.json`` (n_docs, layout), ``DiskIndex.avgdl`` (meta.json,
+    or the dl column on a streaming index whose meta has none),
+    ``manifest.jsonl`` per-shard metrics (n_postings / blob_bytes, written
+    by ``write_index(collect_stats=True)``; a streaming index has no shard
+    rows and folds the lexicon instead), and the lexicon table
     (n_terms / total_ctf / max_df — a parquet metadata-sized aggregate),
     plus one executor-side SUM over the doc store's ``dl`` column for
     total_dl. At 10^12 docs this is one column scan + three O(1) folds;
@@ -860,7 +809,7 @@ def index_stats(di: DiskIndex) -> DataFrame:
         int(lex["total_ctf"] or 0),
         int(lex["max_df"] or 0),
         total_dl,
-        float(di.meta.avgdl),
+        float(di.avgdl()),
         int(di.meta.n_buckets),
         int(di.meta.n_shards),
         len(complete),

@@ -24,6 +24,27 @@ def _package_zip() -> str:
     return out
 
 
+def _default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _default_driver_mem() -> str:
+    """``SPARK_DRIVER_MEM``, else a quarter of the machine's MemTotal.
+
+    Local mode runs ALL task threads in the driver JVM: an 8g heap under
+    32 concurrent tasks thrashed GC (postings build 13.5 s @ local[8] vs
+    SLOWER at local[32]), and 32g restored linear scaling on a 128 GiB
+    box; the default keeps that quarter-of-RAM ratio on any host. Real
+    clusters size executors instead."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{kb // (4 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "search_engine_spark",
     master: str | None = None,
@@ -32,12 +53,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    Defaults are scale-aware: AQE on (runtime partition coalescing + skew
-    join splitting is the backstop for hot bigram terms), Arrow on (every
-    Python-side operator is a vectorized pandas/Arrow UDF), UTC timezone
-    (oracle comparisons against DuckDB).
+    Cores and driver heap come from the machine (``_default_cpus``,
+    ``_default_driver_mem``). Defaults are scale-aware: AQE on (runtime
+    partition coalescing + skew join splitting is the backstop for hot
+    bigram terms), Arrow on (every Python-side operator is a vectorized
+    pandas/Arrow UDF), UTC timezone (oracle comparisons against DuckDB).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _default_cpus()
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     b = (
@@ -50,11 +72,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode runs ALL task threads in the driver JVM: an 8g heap
-        # under 32 concurrent tasks thrashes GC (measured: postings build
-        # 13.5 s @ local[8] vs SLOWER at local[32]); 32g restores linear
-        # scaling on this 128 GiB box. Real clusters size executors instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

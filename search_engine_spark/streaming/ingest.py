@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.postings import build_postings
 from ..operators.segments import (
     build_segments,
     corpus_fingerprint,

@@ -97,40 +97,6 @@ def test_compression_beats_absolute():
     assert len(blob) < 1000 * (1 + 1 + 1 + 1) + 50
 
 
-def test_packed_build_segments_byte_identical(spark):
-    """The packed shuffle path (pos_blob binary) must produce blobs
-    byte-identical to the list path."""
-    from search_engine_spark.operators.postings import (
-        build_documents_from_testdata,
-        build_postings,
-        build_postings_packed,
-    )
-    from search_engine_spark.operators.segments import build_segments
-
-    docs = build_documents_from_testdata(spark, "/root/testdata/sf0.001")
-    a = build_segments(build_postings(docs), n_buckets=8, n_salts=2, salt_threshold=50)
-    b = build_segments(
-        build_postings_packed(docs), n_buckets=8, n_salts=2, salt_threshold=50
-    )
-
-    def key(rows):
-        return {
-            (r.term_id, r.salt): (
-                bytes(r.blob),
-                tuple(r.block_last),
-                tuple(r.block_max_tf),
-                tuple(r.block_offsets),
-                r.df,
-                r.ctf,
-            )
-            for r in rows
-        }
-
-    ka, kb = key(a.collect()), key(b.collect())
-    assert set(ka) == set(kb)
-    assert ka == kb
-
-
 def test_encode_bucket_packed_matches_reference():
     import numpy as np
 

@@ -6,8 +6,9 @@ import pytest
 
 from search_engine_spark.corpus import generate_corpus
 from search_engine_spark.operators.docids import assign_doc_ids
-from search_engine_spark.operators.postings import build_documents_from_corpus, build_index
-from search_engine_spark.operators.search import search
+from search_engine_spark.operators.postings import build_documents_from_corpus
+from search_engine_spark.operators.segments import load_index, write_index
+from search_engine_spark.operators.wand import search_segments
 from search_engine_spark.oracle.reference import OracleIndex
 
 N_DOCS = 240
@@ -26,14 +27,16 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def built(spark, tmp_path_factory):
     corpus = generate_corpus(spark, N_DOCS, n_partitions=4).cache()
     docs = build_documents_from_corpus(corpus)
-    idx = build_index(docs)
+    d = str(tmp_path_factory.mktemp("corpus_e2e") / "idx")
+    write_index(docs, d, n_buckets=8, n_shards=1, n_salts=2)
+    di = load_index(spark, d)
     oracle = OracleIndex()
     for r in docs.select("doc_id", "url", "title", "body").collect():
         oracle.add_document(r.doc_id, r.url, r.title, r.body)
-    return corpus, idx, oracle
+    return corpus, di, oracle
 
 
 def test_corpus_deterministic(spark, built):
@@ -45,16 +48,16 @@ def test_corpus_deterministic(spark, built):
 
 
 def test_html_docs_parsed_titles(built):
-    _, idx, _ = built
-    titled = idx.documents.filter("title != ''").count()
+    _, di, _ = built
+    titled = di.documents.filter("title != ''").count()
     assert titled == N_DOCS // 6  # one lang in 6 is html, all carry <title>
 
 
 def test_docid_assignment_scalable_matches_window(built):
     from pyspark.sql import functions as F
 
-    _, idx, _ = built
-    base = idx.documents.select(F.col("url").alias("u")).repartition(5)
+    _, di, _ = built
+    base = di.documents.select(F.col("url").alias("u")).repartition(5)
     seq = assign_doc_ids(base, key_cols=["u"], scalable=False).select(
         "u", F.col("doc_id").alias("a")
     )
@@ -70,8 +73,8 @@ def test_docid_assignment_scalable_matches_window(built):
 def test_corpus_rank_identity(built, query):
     from tests.test_search_e2e import assert_rank_identical
 
-    _, idx, oracle = built
-    got = [(r.doc_id, r.score) for r in search(idx, query).collect()]
+    _, di, oracle = built
+    got = [(r.doc_id, r.score) for r in search_segments(di, query).collect()]
     exp = oracle.search(query)
     assert_rank_identical(got, exp)
 
@@ -79,9 +82,9 @@ def test_corpus_rank_identity(built, query):
 def test_sha256_invariant_corpus(built):
     import hashlib
 
-    corpus, idx, _ = built
+    corpus, di, _ = built
     # invariant survives the parse/docid pipeline end-to-end
-    rows = idx.documents.limit(50).collect()
+    rows = di.documents.limit(50).collect()
     src = {r.content_sha256 for r in corpus.select("content_sha256").collect()}
     for r in rows:
         assert r.content_sha256 in src

@@ -6,11 +6,10 @@ candidates pre-truncated to the 50 lowest docIds.
 
 import pytest
 
-from search_engine_spark.operators.postings import (
-    build_documents_from_testdata,
-    build_index,
-)
-from search_engine_spark.operators.search import paginate, search
+from search_engine_spark.operators.postings import build_documents_from_testdata
+from search_engine_spark.operators.search import paginate
+from search_engine_spark.operators.segments import load_index, write_index
+from search_engine_spark.operators.wand import search_segments
 from search_engine_spark.oracle.reference import OracleIndex
 
 QUERIES = [
@@ -29,14 +28,37 @@ QUERIES = [
 ]
 
 
+# search_segments routes: the driver numpy route (default) and the
+# executor-side plan, forced by dropping the driver-postings valve to 0
+ROUTES = {"driver": {}, "executor": {"max_driver_postings": 0}}
+
+
+def route_params(values):
+    """(value, route) pairs; the driver route keeps the bare value as its
+    test id, the executor route appends ``-executor``."""
+    return [
+        pytest.param(v, r, id=str(v) if r == "driver" else f"{v}-{r}")
+        for r in ROUTES
+        for v in values
+    ]
+
+
 @pytest.fixture(scope="module")
-def built(spark, sf_dir):
+def built(spark, sf_dir, tmp_path_factory):
     docs = build_documents_from_testdata(spark, sf_dir)
-    idx = build_index(docs)
+    d = str(tmp_path_factory.mktemp("search_e2e") / "idx")
+    write_index(docs, d, n_buckets=8, n_shards=1, n_salts=2)
     oracle = OracleIndex()
     for r in docs.select("doc_id", "url", "title", "body").collect():
         oracle.add_document(r.doc_id, r.url, r.title, r.body)
-    return idx, oracle
+    return d, oracle
+
+
+def _search(spark, index_dir, query, route="driver", **kw):
+    """Ranked (doc_id, score) rows from a fresh handle (cold caches)."""
+    di = load_index(spark, index_dir)
+    rows = search_segments(di, query, **ROUTES[route], **kw).collect()
+    return [(r.doc_id, r.score) for r in rows]
 
 
 def assert_rank_identical(got, exp, tol=1e-9):
@@ -52,17 +74,17 @@ def assert_rank_identical(got, exp, tol=1e-9):
     assert [d for d, _ in g] == [d for d, _ in e]
 
 
-@pytest.mark.parametrize("query", QUERIES)
-def test_rank_identity(built, query):
-    idx, oracle = built
-    got = [(r.doc_id, r.score) for r in search(idx, query).collect()]
+@pytest.mark.parametrize("query, route", route_params(QUERIES))
+def test_rank_identity(spark, built, query, route):
+    d, oracle = built
+    got = _search(spark, d, query, route)
     exp = oracle.search(query)
     assert_rank_identical(got, exp)
 
 
-def test_pagination(built):
-    idx, _ = built
-    ranked = search(idx, "the")
+def test_pagination(spark, built):
+    d, _ = built
+    ranked = search_segments(load_index(spark, d), "the")
     page1 = paginate(ranked, 1).collect()
     page2 = paginate(ranked, 2).collect()
     assert len(page1) == 10 and len(page2) == 10
@@ -71,11 +93,11 @@ def test_pagination(built):
     assert page1[0].score >= page1[-1].score
 
 
-def test_per_shard_truncation_is_lowest_50_docids(built):
+def test_per_shard_truncation_is_lowest_50_docids(spark, built):
     # engine.go:65: the candidate set is cut to the 50 LOWEST docIds before
     # the score sort — a high-scoring doc with docId rank >50 must be absent.
-    idx, oracle = built
-    got = {r.doc_id for r in search(idx, "the").collect()}
+    d, oracle = built
+    got = {doc for doc, _ in _search(spark, d, "the")}
     all_cands = sorted(oracle.search_docs("the"))
     assert got == set(all_cands[:50])
 
@@ -90,47 +112,17 @@ def test_sha256_invariant(spark, sf_dir):
         assert hashlib.sha256(r.body.encode()).hexdigest() == r.content_sha256
 
 
-@pytest.mark.parametrize("num_shards", [2, 3, 7])
-def test_num_shards_truncation_emulation(built, num_shards):
+@pytest.mark.parametrize("num_shards, route", route_params([2, 3, 7]))
+def test_num_shards_truncation_emulation(spark, built, num_shards, route):
     """SURVEY §7.4.5: per-index-server 50-lowest-docId truncation
     (engine.go:64-65) + web fan-in (search.go:147-151) — engine's
-    num_shards knob vs the oracle's sharded fold."""
-    idx, oracle = built
+    num_shards knob vs the oracle's sharded fold, on both routes."""
+    d, oracle = built
     for query in ["the", "table scan", "spark"]:
-        got = [
-            (r.doc_id, r.score)
-            for r in search(idx, query, num_shards=num_shards).collect()
-        ]
+        got = _search(spark, d, query, route, num_shards=num_shards)
         exp = oracle.search(query, num_shards=num_shards)
         assert_rank_identical(got, exp)
     # sharded union is a superset of (or equal to) the single-shard set
-    one = {r.doc_id for r in search(idx, "the").collect()}
-    many = {r.doc_id for r in search(idx, "the", num_shards=num_shards).collect()}
+    one = {doc for doc, _ in _search(spark, d, "the", route)}
+    many = {doc for doc, _ in _search(spark, d, "the", route, num_shards=num_shards)}
     assert one <= many
-
-
-def test_num_shards_segment_path(built, spark, tmp_path):
-    """Same emulation through the compressed-blob path (driver route) and
-    the executor-side route."""
-    from search_engine_spark.operators.postings import build_documents_from_testdata
-    from search_engine_spark.operators.segments import load_index, write_index
-    from search_engine_spark.operators import wand
-
-    idx, oracle = built
-    d = str(tmp_path / "idx")
-    docs = idx.documents.select("doc_id", "url", "title", "body", "content_sha256")
-    write_index(docs, d, n_buckets=8, n_shards=1, n_salts=2)
-    for query in ["the", "table scan"]:
-        exp = oracle.search(query, num_shards=3)
-        got_drv = [
-            (r.doc_id, r.score)
-            for r in wand.search_segments(load_index(spark, d), query, num_shards=3).collect()
-        ]
-        assert_rank_identical(got_drv, exp)
-        got_dist = [
-            (r.doc_id, r.score)
-            for r in wand.search_segments(
-                load_index(spark, d), query, max_driver_postings=0, num_shards=3
-            ).collect()
-        ]
-        assert_rank_identical(got_dist, exp)

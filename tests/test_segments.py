@@ -1,6 +1,6 @@
 """Segment index tests: build + salted merge equivalence, disk
 round-trip, manifest resume, WAND equivalence, rank-identity of the
-blob path vs the DataFrame path."""
+blob path vs the pure-Python oracle."""
 
 import json
 import os
@@ -10,14 +10,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark.functions import codec
 from search_engine_spark.functions.tokenizer import term_to_id
 from search_engine_spark.operators import wand
 from search_engine_spark.operators.postings import (
     build_documents_from_testdata,
-    build_index,
-    build_postings,
+    build_postings_packed,
 )
-from search_engine_spark.operators.search import search
 from search_engine_spark.operators.segments import (
     build_segments,
     corpus_fingerprint,
@@ -26,6 +25,7 @@ from search_engine_spark.operators.segments import (
     read_manifest,
     write_index,
 )
+from search_engine_spark.oracle.reference import OracleIndex
 
 QUERIES = ["table", "spark", "table spark", "table -dup", "dup", "spark site:src3"]
 
@@ -44,44 +44,51 @@ def index_dir(tmp_path_factory, docs):
     return path
 
 
-def test_segments_match_postings(spark, docs):
+@pytest.fixture(scope="module")
+def oracle(docs):
+    o = OracleIndex()
+    for r in docs.select("doc_id", "url", "title", "body").collect():
+        o.add_document(r.doc_id, r.url, r.title, r.body)
+    return o
+
+
+def _assert_postings_match_oracle(df_ctf, blob_of, oracle):
+    """df/ctf for every term equal the oracle's postings, and the hottest
+    (salted) term's blob decodes to the oracle's doc_ids, title_ends and
+    title ++ body positions. ``df_ctf``: {term_id: (df, ctf)};
+    ``blob_of(term_id)`` returns that term's (merged) blob."""
+    exp = {
+        term_to_id(t): (len(ps), sum(len(p.positions) for p in ps.values()))
+        for t, ps in oracle.postings.items()
+    }
+    assert df_ctf == exp
+    hot = max(oracle.postings, key=lambda t: len(oracle.postings[t]))
+    raw = [oracle.postings[hot][d] for d in sorted(oracle.postings[hot])]
+    d, te, _, pos = codec.decode_term_postings(blob_of(term_to_id(hot)))
+    assert d.tolist() == [p.doc_id for p in raw]
+    assert te.tolist() == [p.title_end for p in raw]
+    assert pos.tolist() == [x for p in raw for x in p.positions]
+
+
+def test_segments_match_postings(spark, docs, oracle):
     """Segment blobs decode back to exactly the uncompressed postings."""
-    postings = build_postings(docs).cache()
-    seg = merge_salted(build_segments(postings, n_buckets=8, n_salts=4, salt_threshold=50))
+    seg = merge_salted(
+        build_segments(build_postings_packed(docs), n_buckets=8, n_salts=4, salt_threshold=50)
+    )
     rows = {r["term_id"]: r for r in seg.collect()}
-    exp = (
-        postings.groupBy("term_id")
-        .agg(F.count("*").alias("df"), F.sum(F.size("positions")).alias("ctf"))
-        .collect()
-    )
-    assert len(rows) == len(exp)
-    for r in exp:
-        s = rows[r["term_id"]]
-        assert s["df"] == r["df"] and s["ctf"] == r["ctf"]
-    # spot-check one term's full decode against the raw postings
-    tid = max(exp, key=lambda r: r["df"])["term_id"]  # a salted (hot) term
-    from search_engine_spark.functions import codec
-
-    d, te, pc, pos = codec.decode_term_postings(bytes(rows[tid]["blob"]))
-    raw = (
-        postings.filter(F.col("term_id") == tid)
-        .orderBy("doc_id")
-        .select("doc_id", "title_end", "positions")
-        .collect()
-    )
-    assert d.tolist() == [x["doc_id"] for x in raw]
-    assert te.tolist() == [x["title_end"] for x in raw]
-    assert pos.tolist() == [p for x in raw for p in x["positions"]]
-    postings.unpersist()
+    df_ctf = {t: (r["df"], r["ctf"]) for t, r in rows.items()}
+    _assert_postings_match_oracle(df_ctf, lambda t: bytes(rows[t]["blob"]), oracle)
 
 
-def test_disk_roundtrip_and_lexicon(spark, index_dir, docs):
+def test_disk_roundtrip_and_lexicon(spark, index_dir, docs, oracle):
     di = load_index(spark, index_dir)
     assert di.meta.n_docs == docs.count()
-    lex = {r["term"]: r["df"] for r in di.lexicon.collect()}
-    idx = build_index(docs, cache=False)
-    exp = {r["term"]: r["df"] for r in idx.lexicon.collect()}
-    assert lex == exp
+    lex = di.lexicon.collect()
+    assert {r["term"] for r in lex} == set(oracle.postings)
+    df_ctf = {r["term_id"]: (r["df"], r["ctf"]) for r in lex}
+    _assert_postings_match_oracle(
+        df_ctf, lambda t: wand.fetch_term_segments(di, [t])[t].blob, oracle
+    )
 
 
 def _rounded_order(rows):
@@ -91,18 +98,22 @@ def _rounded_order(rows):
     return sorted(((r["doc_id"], round(r["score"], 6)) for r in rows), key=lambda x: (-x[1], x[0]))
 
 
+def _assert_matches_oracle(rows, oracle, query):
+    """Engine rows == OracleIndex.search: same 6-dp ranking, scores to 1e-9."""
+    exp = oracle.search(query)
+    assert _rounded_order(rows) == _rounded_order(
+        [{"doc_id": d, "score": sc} for d, sc in exp]
+    )
+    got = {r["doc_id"]: r["score"] for r in rows}
+    for d, sc in exp:
+        assert abs(got[d] - sc) < 1e-9
+
+
 @pytest.mark.parametrize("query", QUERIES)
-def test_blob_search_rank_identical(spark, index_dir, docs, query):
-    """search_segments (compressed blob path) == search (DataFrame path)."""
+def test_blob_search_rank_identical(spark, index_dir, oracle, query):
+    """search_segments (compressed blob path) == the pure-Python oracle."""
     di = load_index(spark, index_dir)
-    idx = build_index(docs)
-    ra = wand.search_segments(di, query).collect()
-    rb = search(idx, query).collect()
-    assert _rounded_order(ra) == _rounded_order(rb)
-    sa = {r["doc_id"]: r["score"] for r in ra}
-    sb = {r["doc_id"]: r["score"] for r in rb}
-    for d in sa:
-        assert abs(sa[d] - sb[d]) < 1e-9
+    _assert_matches_oracle(wand.search_segments(di, query).collect(), oracle, query)
 
 
 def test_wand_equals_exhaustive(spark, index_dir):
@@ -115,7 +126,7 @@ def test_wand_equals_exhaustive(spark, index_dir):
             assert abs(s1 - s2) < 1e-9
 
 
-def test_resume_skips_completed_shards(spark, docs, tmp_path):
+def test_resume_skips_completed_shards(spark, docs, oracle, tmp_path):
     path = str(tmp_path / "idx")
     write_index(docs, path, n_buckets=8, n_shards=2, n_salts=2, salt_threshold=50)
     m1 = read_manifest(path)
@@ -136,10 +147,7 @@ def test_resume_skips_completed_shards(spark, docs, tmp_path):
     assert set(m2) == {0, 1}
     # and the resumed index still answers queries identically
     di = load_index(spark, path)
-    idx = build_index(docs)
-    a = wand.search_segments(di, "table").collect()
-    b = search(idx, "table").collect()
-    assert _rounded_order(a) == _rounded_order(b)
+    _assert_matches_oracle(wand.search_segments(di, "table").collect(), oracle, "table")
 
 
 def test_fingerprint_invalidates_on_input_change(spark, docs, tmp_path):

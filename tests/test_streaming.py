@@ -70,6 +70,19 @@ def test_meta_counts(spark, built, sf_dir):
     assert di.documents.count() == n
 
 
+def test_index_stats_streaming_equals_batch(spark, built):
+    """The monitor gauges work on a streaming index (its manifest holds
+    gen rows, its meta.json no avgdl) and agree with the batch index."""
+    from search_engine_spark.operators.segments import index_stats
+
+    stream_dir, batch_dir = built
+    cols = ["n_docs", "n_terms", "n_postings", "total_ctf", "max_df", "total_dl"]
+    got = index_stats(load_index(spark, stream_dir)).collect()[0]
+    exp = index_stats(load_index(spark, batch_dir)).collect()[0]
+    assert [got[c] for c in cols] == [exp[c] for c in cols]
+    assert got.avgdl == pytest.approx(got.total_dl / got.n_docs)
+
+
 def test_compaction_preserves_results(spark, built):
     stream_dir, batch_dir = built
     compacted = stream_dir + "_compacted"

@@ -43,8 +43,6 @@ def main() -> int:
 
     spark = get_spark(
         app_name="check_oracle",
-        master="local[8]",
-        shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
